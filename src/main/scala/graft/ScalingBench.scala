@@ -8,13 +8,14 @@ import java.nio.file.{Files, Paths}
   * sandbox substitute for N vs 4N executors):
   *
   * 1. materialize the deterministic corpus to parquet once,
-  * 2. run the identical KG pipeline (scan → extract → link → resolve →
-  *    materialize) at local[N] and local[4N] with shuffle partitions
+  * 2. run the identical KG pipeline (scan → extract → link → emit →
+  *    split dedup) at local[N] and local[4N] with shuffle partitions
   *    scaled to cores,
   * 3. report docs/sec, triples/sec and scaling efficiency
   *    (throughput@4N / throughput@N) / 4, gate ≥ 0.8.
   *
-  * Usage: runMain graft.ScalingBench [nDocs] [N] — defaults 150000, 8.
+  * Usage: runMain graft.ScalingBench [nDocs] [N] — defaults 800000, 2
+  * (the recorded protocol; tools/scaling.sh shares them).
   * Writes/updates BENCH.md and prints one JSON line per level plus a
   * summary line.
   */
@@ -48,11 +49,17 @@ object ScalingBench {
   def pipelineCount(spark: SparkSession, docs: org.apache.spark.sql.DataFrame,
       nDocs: Long): Long = {
     val records = kg.Extract.records(docs)
-    val matched = kg.Link.matchTaxaCompact(records, kg.DataGen.wdSparqlRows,
-      kg.DataGen.lineageRows, nDocs)
+    // driver rows always: the compact path is the one being scaled
+    val taxa = kg.Link.stackTaxa(records, nDocs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val matched = kg.Link.matchStacked(taxa, kg.DataGen.wdSparqlRows,
+      kg.DataGen.lineageRows, Long.MaxValue)
+      .fold(identity, _ => sys.error("matcher took the distributed arm"))
+    taxa.unpersist()
     val (idMap, nameMap) = kg.Materialize.localWdMapDicts(matched)
     val mm = kg.Extract.mediaMentions(records, kg.DataGen.mediaMeta(spark))
-    kg.Materialize.globiTriplesFusedMaps(records, idMap, nameMap, Some(mm)).count()
+    kg.Materialize.dedupShared(kg.Materialize.triplesTagged(records,
+      kg.Materialize.DriverDicts(idMap, nameMap), Some(mm)), None).count()
   }
 
   def runLevel(cores: Int, nDocs: Long, corpusDir: String): Level = {
@@ -74,7 +81,7 @@ object ScalingBench {
       // canonicalization timed separately (iterative; not part of the
       // extracted+linked/sec headline)
       val records = kg.Extract.records(docs)
-      val matched = kg.Link.matchTaxaCompactDf(records, kg.DataGen.wdSparqlRows,
+      val matched = kg.Link.matchTaxaAdaptive(records, kg.DataGen.wdSparqlRows,
         kg.DataGen.lineageRows, nDocs)
       val t1 = System.nanoTime()
       val edges = kg.Canonical.equivalenceEdges(matched)
@@ -110,8 +117,8 @@ object ScalingBench {
   }
 
   def singleJvm(args: Array[String]): Unit = {
-    val nDocs = args.headOption.map(_.toLong).getOrElse(150000L)
-    val n = args.drop(1).headOption.map(_.toInt).getOrElse(8)
+    val nDocs = args.headOption.map(_.toLong).getOrElse(800000L)
+    val n = args.drop(1).headOption.map(_.toInt).getOrElse(2)
     val tmp = Files.createTempDirectory("graft-scaling").toString
     val corpusDir = s"$tmp/corpus"
 

@@ -78,7 +78,9 @@ object Link {
   }
 
   /** Stack source/target taxon frames, normalize ids/urls, dedup keeping
-    * first occurrence, unpack rank paths (matcher.py:133-180).
+    * first occurrence (matcher.py:133-176) — the distinct-taxa table
+    * (TaxonId, TaxonName, TaxonPathName, TaxonRankName, rowIdx) the
+    * matcher seam takes.
     * rowIdx: source rows get recNum, target rows get nDocs+recNum —
     * reproduces pandas concat order without any positional state.
     */
@@ -99,10 +101,9 @@ object Link {
     val norm = stacked.select(
       Seq("TaxonId", "TaxonName", "TaxonPathName", "TaxonRankName")
         .map(c => Norm.normalizeUri(col(c)).as(c)) :+ col("rowIdx"): _*)
-    val dedup = norm
+    norm
       .groupBy(col("TaxonId"), col("TaxonName"), col("TaxonPathName"), col("TaxonRankName"))
       .agg(min(col("rowIdx")).as("rowIdx"))
-    unpackRanks(dedup)
   }
 
   /** Rank-path unpack (matcher.py:416-427) over a distinct-taxa table:
@@ -111,9 +112,8 @@ object Link {
     * (dict(zip_longest) semantics, matcher.py:419,
     * = LocalMatcher.extractRanks .toMap) — a plain map_from_arrays
     * would throw under mapKeyDedupPolicy=EXCEPTION on noisy paths like
-    * "kingdom|kingdom|family". Factored out of stackTaxa so the
-    * ACCUMULATED taxa state (which stores only the 5 base columns) can
-    * re-enter the distributed matcher without re-stacking the corpus.
+    * "kingdom|kingdom|family". Runs in the distributed matcher arm
+    * only: the driver arm unpacks ranks in LocalMatcher.
     */
   def unpackRanks(dedup: DataFrame): DataFrame = {
     val ranksArr = transform(split(col("TaxonRankName"), "\\|"), r => trim(r))
@@ -255,25 +255,6 @@ object Link {
     rankUpdated.select(outCols: _*).unionByName(keep.select(outCols: _*))
   }
 
-  /** Compact matcher: distributed stack+distinct (the only corpus-scale
-    * step), then the dimension-sized dictionary/scoring passes run on
-    * the driver via LocalMatcher — one collect instead of ~12 small
-    * jobs. Returns the matched rows; callers broadcast them (or build
-    * resolution maps directly). The distributed formulation below
-    * remains the beyond-driver-memory path; tests assert both equal.
-    */
-  def matchTaxaCompact(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
-      lineageRows: Seq[Seq[String]], nDocs: Long): Seq[LocalMatcher.MatchedRow] = {
-    val taxa = stackTaxa(records, nDocs)
-      .select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
-        col("TaxonRankName"), col("rowIdx"))
-      .collect()
-      .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
-        r.getString(2), r.getString(3), r.getLong(4)))
-      .sortBy(_.rowIdx)
-    LocalMatcher.matchTaxa(taxa.toSeq, wdSparqlRows, lineageRows)
-  }
-
   /** Driver-local matched rows → DataFrame via parallelize, NOT a
     * LocalRelation: a LocalTableScan feeding an exchange embeds the
     * whole row collection in every task binary (the driver bench logged
@@ -297,111 +278,80 @@ object Link {
       schema)
   }
 
-  /** Compact matcher as a DataFrame (same schema consumers expect). */
-  def matchTaxaCompactDf(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
-      lineageRows: Seq[Seq[String]], nDocs: Long): DataFrame =
-    matchedRowsToDf(records.sparkSession,
-      matchTaxaCompact(records, wdSparqlRows, lineageRows, nDocs))
-
-  /** Adaptive matcher: counts the DISTINCT taxa table (the only thing
-    * the compact path collects) and picks the driver-local refinement
-    * when it is genuinely dimension-sized, else the fully distributed
-    * formulation — the caller no longer has to assert the
-    * fits-in-driver assumption. The count reuses the persisted taxa
-    * table, so the guard costs one cheap action, not a second
-    * corpus-scale pass. Both paths are asserted equal in
-    * KgPipelineSpec.
+  /** Records → matched-taxa table (matcher.py:432-478): [[stackTaxa]]
+    * then [[matchStacked]], the driver rows shipped back as a DataFrame.
+    * Both arms are asserted equal in KgPipelineSpec. The stacked table
+    * is persisted only when the guard will count it: the count and the
+    * collect both read it, so the corpus-scale stack runs once.
     */
   def matchTaxaAdaptive(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
       lineageRows: Seq[Seq[String]], nDocs: Long,
       maxDriverRows: Long = 2000000L): DataFrame = {
-    val spark = records.sparkSession
-    // a non-positive threshold FORCES the distributed formulation (the
-    // kg_pipeline_triples_dist production-path gate): the guard count
-    // can never choose the driver path, so skip building + counting the
-    // guard's stacked-taxa table entirely — matchTaxa stacks and
-    // persists its own
-    if (maxDriverRows <= 0)
-      return matchTaxaDistributed(records, wdSparqlRows, lineageRows, nDocs)
     val taxa = stackTaxa(records, nDocs)
-      .select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
-        col("TaxonRankName"), col("rowIdx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out =
-      if (taxa.count() <= maxDriverRows) {
-        val rows = taxa.collect()
-          .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
-            r.getString(2), r.getString(3), r.getLong(4)))
-          .sortBy(_.rowIdx)
-        matchedRowsToDf(spark,
-          LocalMatcher.matchTaxa(rows.toSeq, wdSparqlRows, lineageRows))
-      } else matchTaxaDistributed(records, wdSparqlRows, lineageRows, nDocs)
-    taxa.unpersist()
-    out
+    if (maxDriverRows > 0)
+      taxa.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try matchStacked(taxa, wdSparqlRows, lineageRows, maxDriverRows)
+      .fold(matchedRowsToDf(records.sparkSession, _), identity)
+    finally taxa.unpersist()
   }
 
-  /** Fully distributed matcher over the fixture dimension rows — the
-    * beyond-driver-memory arm of [[matchTaxaAdaptive]]: rebuild the
-    * dimension DataFrames from the same fixture rows and run the
-    * distributed formulation.
-    */
-  def matchTaxaDistributed(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
-      lineageRows: Seq[Seq[String]], nDocs: Long): DataFrame = {
-    val spark = records.sparkSession
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
-    val wdCols = Seq("WdID", "eol", "gbif", "ncbi", "ott", "itis",
-      "irmng", "col", "nbn", "worms", "bold", "plazi", "apni", "msw3",
-      "iNat", "eppo", "WdName")
-    val wdSchema = StructType(wdCols.map(StructField(_, StringType, true)))
-    val wd = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        wdSparqlRows.map(org.apache.spark.sql.Row.fromSeq), 1), wdSchema)
-    val linCols = Seq("WdID", "WdName", "kingdom", "phylum", "class",
-      "order", "family", "genus", "species")
-    val linSchema = StructType(linCols.map(StructField(_, StringType, true)))
-    val lin = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        lineageRows.map(org.apache.spark.sql.Row.fromSeq), 1), linSchema)
-    matchTaxa(records, wd, lin, nDocs)
-  }
-
-  /** Full matcher pipeline: records → matched-taxa table (matcher.py:432-478).
+  /** The matcher seam, over a STACKED distinct-taxa table (TaxonId,
+    * TaxonName, TaxonPathName, TaxonRankName, rowIdx — the
+    * [[stackTaxa]] output, or the incremental path's accumulated taxa
+    * state, whose global first-occurrence ordinals make it the same
+    * table without re-scanning the corpus).
     *
-    * The stacked-dedup taxa table and the matcher output are
-    * dimension-sized (distinct taxa, not records) — they are persisted
-    * so the downstream branch joins and the four resolution broadcasts
-    * compute them once instead of re-deriving the whole upstream DAG per
-    * broadcast (the serial fraction that kills scaling efficiency).
+    * While the table has at most `maxDriverRows` rows (it is
+    * dimension-sized: distinct mentions, not records) it is collected
+    * and refined on the driver by LocalMatcher — one collect instead of
+    * ~12 small jobs — and the matched rows come back Left. Beyond that
+    * the fully distributed formulation runs over dimension frames built
+    * from the same rows and the persisted matcher output comes back
+    * Right (the caller unpersists it). A non-positive `maxDriverRows`
+    * forces the distributed arm without the guard's count job (the
+    * kg_pipeline_triples_dist production-path gate). The guard's count
+    * and the collect each read `taxa`: a caller whose table is costly
+    * to recompute persists it first.
     */
-  def matchTaxa(records: DataFrame, wdSparql: DataFrame, lineage: DataFrame,
-      nDocs: Long): DataFrame = {
-    val taxa = stackTaxa(records, nDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = matchStackedTaxa(taxa, wdSparql, lineage)
-    taxa.unpersist() // folded into the materialized matcher output
-    out
+  private[graft] def matchStacked(taxa: DataFrame, wdSparqlRows: Seq[Seq[String]],
+      lineageRows: Seq[Seq[String]], maxDriverRows: Long)
+      : Either[Seq[LocalMatcher.MatchedRow], DataFrame] = {
+    val base = taxa.select(col("TaxonId"), col("TaxonName"),
+      col("TaxonPathName"), col("TaxonRankName"), col("rowIdx"))
+    if (maxDriverRows > 0 && base.count() <= maxDriverRows) {
+      val rows = base.collect()
+        .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
+          r.getString(2), r.getString(3), r.getLong(4)))
+        .sortBy(_.rowIdx)
+      Left(LocalMatcher.matchTaxa(rows.toSeq, wdSparqlRows, lineageRows))
+    } else {
+      // persisted: the downstream branch joins (initialMatch,
+      // secondaryMatch's fix/keep split) reference it several times,
+      // and the O(k²) exists-filter in the rank unpack must run once,
+      // not per branch
+      val unpacked = unpackRanks(base)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val out = matchStackedTaxa(unpacked, dimension(taxa.sparkSession,
+        wdCols, wdSparqlRows), dimension(taxa.sparkSession, lineageCols,
+        lineageRows))
+      unpacked.unpersist()
+      Right(out)
+    }
   }
 
-  /** Distributed matcher over an ALREADY-STACKED distinct-taxa table —
-    * the incremental-maintenance entry point: the accumulated taxa
-    * state (TaxonId, TaxonName, TaxonPathName, TaxonRankName, rowIdx)
-    * IS a stacked table with global first-occurrence ordinals, so the
-    * corpus is never re-scanned to rebuild dictionaries. Accepts the
-    * 5-column base shape (ranks re-derived distributedly) or the full
-    * stackTaxa output.
-    */
-  def matchTaxaFromTaxa(taxa5: DataFrame, wdSparql: DataFrame,
-      lineage: DataFrame): DataFrame = {
-    // persisted for the same reason matchTaxa persists its stacked
-    // taxa: the downstream branch joins (initialMatch, secondaryMatch's
-    // fix/keep split) reference this multiple times, and the O(k²)
-    // exists-filter in the rank unpack must run once, not per branch
-    val unpacked = unpackRanks(taxa5.select(col("TaxonId"), col("TaxonName"),
-        col("TaxonPathName"), col("TaxonRankName"), col("rowIdx")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = matchStackedTaxa(unpacked, wdSparql, lineage)
-    unpacked.unpersist()
-    out
+  private val wdCols = Seq("WdID", "eol", "gbif", "ncbi", "ott", "itis",
+    "irmng", "col", "nbn", "worms", "bold", "plazi", "apni", "msw3",
+    "iNat", "eppo", "WdName")
+  private val lineageCols = Seq("WdID", "WdName", "kingdom", "phylum",
+    "class", "order", "family", "genus", "species")
+
+  /** Dimension rows (all-string, nullable) → a one-slice DataFrame. */
+  private def dimension(spark: org.apache.spark.sql.SparkSession,
+      cols: Seq[String], rows: Seq[Seq[String]]): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType, StringType}
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(org.apache.spark.sql.Row.fromSeq), 1),
+      StructType(cols.map(StructField(_, StringType, true))))
   }
 
   private def matchStackedTaxa(taxa: DataFrame, wdSparql: DataFrame,

@@ -11,13 +11,14 @@ import scala.collection.mutable
   * assumption that lets the resolution dictionaries broadcast. Running
   * the dozen dictionary/scoring passes locally replaces ~12 small Spark
   * jobs (whose scheduler+codegen latency is the pipeline's serial
-  * fraction) with one collect. The fully distributed formulation
-  * (Link.matchTaxa) remains for vocabularies beyond driver memory, and
-  * both are asserted equal in tests.
+  * fraction) with one collect. The fully distributed formulation (the
+  * other arm of the matcher seam, Link.matchStacked) remains for
+  * vocabularies beyond driver memory, and both are asserted equal in
+  * tests.
   *
-  * Used by both the engine (Link.matchTaxaCompact) and the golden
-  * oracle (Oracle.run) — the distributed matcher is the independently
-  * implemented cross-check.
+  * Used by both the engine (the driver arm of Link.matchStacked) and
+  * the golden oracle (Oracle.run) — the distributed matcher is the
+  * independently implemented cross-check.
   */
 object LocalMatcher {
 

@@ -1,20 +1,22 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import Model._
 
 /** Stages 3+4 — triple emission and graph materialization
   * (src/knowledge_graph/globi_kg_generator.py re-expressed Spark-first).
   *
-  * Resolution (two-tier id→name fallback, J6) is relational: two
-  * broadcast joins + branch-ordered coalesce. Emission (one record → up
-  * to ~30 conditional triples) is a typed flatMap with broadcast
-  * vocabularies — the idiomatic Spark form of a generator/UDTF. Set
-  * semantics (the reference's per-batch rdflib.Graph + cross-batch
-  * first-seen sets, globi_kg_generator.py:78-81,122-126) become one
-  * global dropDuplicates; inverse-relation augmentation (utils.py:84-100)
-  * is a broadcast join against the 24-entry inverse map.
+  * One emission path: [[triplesTagged]] resolves each record (two-tier
+  * id→name fallback, J6) through either broadcast driver hash maps or
+  * the relational [[resolve]] joins, and emits (one record → up to ~30
+  * conditional triples) in a typed flatMap with broadcast vocabularies
+  * — the idiomatic Spark form of a generator/UDTF. Inverse-relation
+  * augmentation (utils.py:84-100) is inline. Set semantics (the
+  * reference's per-batch rdflib.Graph + cross-batch first-seen sets,
+  * globi_kg_generator.py:78-81,122-126) come from [[dedupShared]],
+  * which sends only the shared entity-description triples through a
+  * global distinct.
   *
   * Deviations from the reference, by design (documented for the parity
   * harness):
@@ -374,7 +376,7 @@ object Materialize {
     * span order and the corpus contract has unique refs per doc); the
     * media-object description triples are shared.
     */
-  def mediaTriplesTagged(mediaMentions: DataFrame): DataFrame = {
+  private def mediaTriplesTagged(mediaMentions: DataFrame): DataFrame = {
     val rec = concat(lit(EMIBOX + "inRec"), col("recNum"))
     val m = concat(lit(EMIBOX), col("media_ref"))
     def tr(s: Column, p: Column, o: Column, isLit: Boolean, dt: String,
@@ -393,39 +395,16 @@ object Materialize {
     rows.select(explode(col("ts")).as("t")).select(col("t.*"))
   }
 
-  def mediaTriples(mediaMentions: DataFrame): DataFrame =
-    mediaTriplesTagged(mediaMentions).drop("shared")
-
-  /** Inverse-relation augmentation (utils.py:84-100): broadcast join on
-    * the 24-entry inverse map, IRI objects only.
-    */
-  def addInverses(triples: DataFrame): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val inv = inverseRelations.toSeq.toDF("pred", "invPred")
-    val inverses = triples.filter(!col("objIsLiteral"))
-      .join(broadcast(inv), Seq("pred"))
-      .select(col("obj").as("subj"), col("invPred").as("pred"),
-        col("subj").as("obj"), lit(false).as("objIsLiteral"),
-        lit("").as("objDatatype"))
-    triples.unionByName(inverses)
-  }
-
-  /** Fused resolution + emission: the two dictionaries are collected and
-    * broadcast as hash maps (exactly the reference's broadcast-dict
-    * design, globi_kg_generator.py:88-110) and one typed flatMap walks
-    * records → triples in a single pass — no resolution exchange at all.
-    *
-    * Use when the dictionaries fit executor memory (vocab-sized dims —
-    * the common case). For dictionaries beyond memory, use
-    * resolve() + globiTriples() whose broadcast joins degrade gracefully
-    * to (salted) shuffle joins.
+  /** Fused resolution + emission with driver hash maps built from the
+    * dictionary frames: [[triplesTagged]] over [[DriverDicts]], then
+    * [[dedupShared]].
     */
   def globiTriplesFused(records: DataFrame, dictId: DataFrame,
       dictName: DataFrame, mediaMentions: Option[DataFrame] = None): DataFrame = {
     def toMap(df: DataFrame): Map[String, (String, String)] =
       df.collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-    globiTriplesFusedMaps(records, toMap(dictId), toMap(dictName), mediaMentions)
+    dedupShared(triplesTagged(records, DriverDicts(toMap(dictId), toMap(dictName)),
+      mediaMentions), None)
   }
 
   /** pandas-dict semantics over the compact matcher output
@@ -450,139 +429,115 @@ object Materialize {
     (dictId.toMap, dictName.toMap)
   }
 
-  /** Fused emission keeping the sharing tag (shared=true ⇒ the triple's
-    * subject is content-derived and may repeat across records; false ⇒
-    * minted from this record's recNum, globally unique by construction).
-    * Consumers: globiTriplesFusedMaps (split dedup) and the incremental
-    * maintenance path (anti-join only the shared subset).
+  /** The two resolution dictionaries (id → (wd, mv), name → (wd, mv)),
+    * in one of two forms.
     */
-  def globiTriplesFusedTagged(records: DataFrame,
-      idMap: Map[String, (String, String)],
-      nameMap: Map[String, (String, String)],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
+  sealed trait Dicts
+  /** Driver hash maps, broadcast into the emission flatMap — the
+    * reference's broadcast-dict design (globi_kg_generator.py:88-110):
+    * records → triples in one pass, no resolution exchange at all. For
+    * dictionaries that fit executor memory (the common, vocab-sized
+    * case).
+    */
+  final case class DriverDicts(id: Map[String, (String, String)],
+      name: Map[String, (String, String)]) extends Dicts
+  /** Dictionary frames (key, wd, mv) as [[wdMapDicts]] returns them,
+    * joined by [[resolve]] — broadcast while dictionary-sized, degrading
+    * to (salted) shuffle joins beyond executor memory.
+    */
+  final case class FrameDicts(id: DataFrame, name: DataFrame) extends Dicts
+
+  val tripleCols: Seq[String] = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
+
+  private val recordCols = Seq("doc_id", "recNum",
+    "sourceTaxonId", "sourceTaxonName", "targetTaxonId", "targetTaxonName",
+    "interactionTypeName", "interactionTypeId", "localityName",
+    "referenceDoi", "sourceDOI", "decimalLatitude", "decimalLongitude",
+    "sourceBodyPartName", "sourceBodyPartId", "sourceLifeStageName",
+    "sourceLifeStageId", "targetBodyPartName", "targetBodyPartId",
+    "targetLifeStageName", "targetLifeStageId", "sourceSexName",
+    "targetSexName")
+
+  private def tagTuples(r: ResolvedRecord, v: TermVocab)
+      : Seq[(String, String, String, Boolean, String, Boolean)] =
+    emitTagged(r, v).map { case (t, sh) =>
+      (t.subj, t.pred, t.obj, t.objIsLiteral, t.objDatatype, sh) }
+
+  /** The GloBI emission: records → (triple columns, shared) with the
+    * media triples unioned in, no dedup applied. shared=true ⇒ the
+    * triple's subject is content-derived and may repeat across records;
+    * false ⇒ minted from this record's recNum, globally unique by
+    * construction. Inverses are inline ([[emitTagged]]). Resolution is
+    * two-tier either way (raw id in the id-dict, else raw name in the
+    * name-dict, else drop; self-interactions dropped): a map lookup
+    * inside the flatMap for [[DriverDicts]], [[resolve]]'s joins for
+    * [[FrameDicts]].
+    */
+  def triplesTagged(records: DataFrame, dicts: Dicts,
+      mediaMentions: Option[DataFrame]): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
-    val bcId = spark.sparkContext.broadcast(idMap)
-    val bcName = spark.sparkContext.broadcast(nameMap)
     val bcVocab = spark.sparkContext.broadcast(termVocab())
-    val cols = Seq("doc_id", "recNum",
-      "sourceTaxonId", "sourceTaxonName", "targetTaxonId", "targetTaxonName",
-      "interactionTypeName", "interactionTypeId", "localityName",
-      "referenceDoi", "sourceDOI", "decimalLatitude", "decimalLongitude",
-      "sourceBodyPartName", "sourceBodyPartId", "sourceLifeStageName",
-      "sourceLifeStageId", "targetBodyPartName", "targetBodyPartId",
-      "targetLifeStageName", "targetLifeStageId", "sourceSexName",
-      "targetSexName")
-    val tagged = records.select(cols.map(col): _*).flatMap { r =>
-      def s(i: Int) = r.getString(i)
-      def resolveSide(id: String, name: String): Option[(String, String)] =
-        bcId.value.get(id).orElse(bcName.value.get(name)).map { case (wd, mv) =>
-          (wd, if (name != null && name.nonEmpty) name else mv)
+    val tagged = (dicts match {
+      case DriverDicts(idMap, nameMap) =>
+        val bcId = spark.sparkContext.broadcast(idMap)
+        val bcName = spark.sparkContext.broadcast(nameMap)
+        records.select(recordCols.map(col): _*).flatMap { r =>
+          def s(i: Int) = r.getString(i)
+          def resolveSide(id: String, name: String): Option[(String, String)] =
+            bcId.value.get(id).orElse(bcName.value.get(name)).map { case (wd, mv) =>
+              (wd, if (name != null && name.nonEmpty) name else mv)
+            }
+          (resolveSide(s(2), s(3)), resolveSide(s(4), s(5))) match {
+            case (Some((sWd, sName)), Some((tWd, tName))) if sWd != tWd =>
+              tagTuples(ResolvedRecord(s(0), r.getLong(1), sWd, sName, tWd, tName,
+                s(6), s(7), s(8), s(9), s(10), s(11), s(12), s(13), s(14), s(15),
+                s(16), s(17), s(18), s(19), s(20), s(21), s(22)), bcVocab.value)
+            case _ => Nil
+          }
         }
-      (resolveSide(s(2), s(3)), resolveSide(s(4), s(5))) match {
-        case (Some((sWd, sName)), Some((tWd, tName))) if sWd != tWd =>
-          emitTagged(ResolvedRecord(s(0), r.getLong(1), sWd, sName, tWd, tName,
-            s(6), s(7), s(8), s(9), s(10), s(11), s(12), s(13), s(14), s(15),
-            s(16), s(17), s(18), s(19), s(20), s(21), s(22)), bcVocab.value)
-            .map(x => (x._1.subj, x._1.pred, x._1.obj, x._1.objIsLiteral,
-              x._1.objDatatype, x._2))
-        case _ => Nil
-      }
-    }.toDF("subj", "pred", "obj", "objIsLiteral", "objDatatype", "shared")
+      case FrameDicts(dictId, dictName) =>
+        resolve(records, dictId, dictName).flatMap(r => tagTuples(r, bcVocab.value))
+    }).toDF(tripleCols :+ "shared": _*)
     mediaMentions
       .map(m => tagged.unionByName(mediaTriplesTagged(m)))
       .getOrElse(tagged)
   }
 
-  def globiTriplesFusedMaps(records: DataFrame,
-      idMap: Map[String, (String, String)],
-      nameMap: Map[String, (String, String)],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
-    // referenced twice below (unique/shared branches) — persist so the
-    // emission flatMap runs exactly once
-    val withMedia = globiTriplesFusedTagged(records, idMap, nameMap, mediaMentions)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // split dedup: record-scoped triples are already distinct within the
-    // record and globally unique by the recNum-minted subjects; only the
-    // shared entity-description subset goes through the global distinct
-    // (tiny distinct domain → collapses map-side, near-zero shuffle).
-    // Inverses are already inline (emitTagged).
-    val tripleCols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
-    val uniquePart = withMedia.filter(!col("shared")).select(tripleCols.map(col): _*)
-    val sharedPart = withMedia.filter(col("shared")).select(tripleCols.map(col): _*)
-      .dropDuplicates(tripleCols)
-    uniquePart.unionByName(sharedPart)
+  /** The split dedup over [[triplesTagged]] output: record-scoped triples
+    * are already distinct within the record and globally unique by their
+    * recNum-minted subjects, so they pass through; only the shared
+    * entity-description subset goes through the global distinct (a tiny
+    * distinct domain → collapses map-side, near-zero shuffle). With
+    * `published`, shared triples that table already holds are dropped
+    * too (the incremental append path). `tagged` is persisted here —
+    * both branches read it, so the emission runs once; a caller that
+    * loops unpersists it after its action.
+    */
+  def dedupShared(tagged: DataFrame, published: Option[DataFrame]): DataFrame = {
+    val t = tagged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cols = tripleCols.map(col)
+    val shared = t.filter(col("shared")).select(cols: _*).dropDuplicates(tripleCols)
+    t.filter(!col("shared")).select(cols: _*).unionByName(published.fold(shared)(p =>
+      shared.join(p.select(cols: _*), tripleCols, "left_anti")))
   }
 
-  /** Tagged emission over resolved records (the distributed-dictionary
-    * twin of globiTriplesFusedTagged): (triple columns, shared) with
-    * media triples unioned in, no dedup applied — callers split on the
-    * tag.
+  /** Publish layout: range-partition by (pred, subj) so each
+    * predicate's files are few and subject-clustered, with a
+    * filename-safe `predicate` column to partition the write by.
     */
-  def globiTriplesSplitTagged(resolved: Dataset[ResolvedRecord],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
-    val spark = resolved.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(termVocab())
-    val tagged0 = resolved.flatMap(r => emitTagged(r, bc.value)
-        .map(x => (x._1.subj, x._1.pred, x._1.obj, x._1.objIsLiteral,
-          x._1.objDatatype, x._2)))
-      .toDF("subj", "pred", "obj", "objIsLiteral", "objDatatype", "shared")
-    mediaMentions
-      .map(m => tagged0.unionByName(mediaTriplesTagged(m)))
-      .getOrElse(tagged0)
-  }
-
-  /** Distributed-dictionary emission with the SAME split dedup as the
-    * fused path: record-scoped triples (recNum-minted subjects, unique
-    * by construction) bypass the global distinct; only the shared
-    * entity-description subset — a tiny domain that collapses map-side —
-    * shuffles. This is the beyond-driver-memory companion to
-    * globiTriplesFusedMaps: resolve() upstream does the dictionary
-    * joins (broadcast, degrading to shuffle joins past executor
-    * memory), and the emission never re-shuffles the corpus.
-    */
-  def globiTriplesSplit(resolved: Dataset[ResolvedRecord],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
-    val tagged = globiTriplesSplitTagged(resolved, mediaMentions)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tripleCols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
-    val uniquePart = tagged.filter(!col("shared")).select(tripleCols.map(col): _*)
-    val sharedPart = tagged.filter(col("shared")).select(tripleCols.map(col): _*)
-      .dropDuplicates(tripleCols)
-    uniquePart.unionByName(sharedPart)
-  }
-
-  /** Full GloBI triple materialization: resolved records → deduplicated
-    * triple table.
-    */
-  def globiTriples(resolved: Dataset[ResolvedRecord],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
-    val spark = resolved.sparkSession
-    import spark.implicits._
-    val vocab = termVocab()
-    val bc = spark.sparkContext.broadcast(vocab)
-    // emit() includes inverse augmentation inline; media triples carry
-    // no inverse-mapped predicates
-    val base = resolved.flatMap(r => emit(r, bc.value)).toDF()
-    val withMedia = mediaMentions.map(m => base.unionByName(mediaTriples(m)))
-      .getOrElse(base)
-    withMedia
-      .dropDuplicates("subj", "pred", "obj", "objIsLiteral", "objDatatype")
-  }
-
-  /** Graph write: range-partition by (pred, subj) so each predicate's
-    * files are few and subject-clustered, lay out as
-    * triples/predicate=<p>/part-*.parquet (north rule). The predicate
-    * gets a filename-safe encoding.
-    */
-  def writeTriples(triples: DataFrame, outDir: String, numPartitions: Int = 32): Unit = {
+  def publishLayout(triples: DataFrame, numPartitions: Int): DataFrame =
     triples
       .withColumn("predicate", regexp_replace(col("pred"), "[^A-Za-z0-9]+", "_"))
       .repartitionByRange(numPartitions, col("predicate"), col("subj"))
       .sortWithinPartitions(col("predicate"), col("subj"))
+
+  /** Graph write in the [[publishLayout]]:
+    * triples/predicate=<p>/part-*.parquet (north rule).
+    */
+  def writeTriples(triples: DataFrame, outDir: String, numPartitions: Int = 32): Unit =
+    publishLayout(triples, numPartitions)
       .write.mode("overwrite")
       .partitionBy("predicate")
       .parquet(outDir)
-  }
 }

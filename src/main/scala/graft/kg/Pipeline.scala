@@ -92,37 +92,11 @@ object Pipeline {
     val docs = SnapshotTable.read(spark, docsTableDir, Some(snap))
     val nDocs = docs.count()
     val fp = s"table:$docsTableDir@$snap:docs:$nDocs:v1"
-    val stages = scala.collection.mutable.ArrayBuffer[StageResult]()
-
-    val (records, s1) = stage(spark, outRoot, "10_extract", fp) {
-      Extract.records(docs)
-    }
-    stages += s1
-    val (matched, s2) = stage(spark, outRoot, "20_link", fp) {
-      Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-        DataGen.lineageRows, nDocs)
-    }
-    stages += s2
-    val (triples, s3) = stage(spark, outRoot, "30_triples", fp) {
-      val (dictId, dictName) = Materialize.wdMapDicts(matched)
-      val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
-      Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
-    }
-    stages += s3
-    val (canonical, s4) = stage(spark, outRoot, "40_canonical", fp) {
-      val edges = Canonical.equivalenceEdges(matched)
-      val mapping = Canonical.connectedComponents(edges)
-      Canonical.canonicalizeTriples(triples, mapping)
-    }
-    stages += s4
-
+    val (triples, canonical, stages) = buildStages(spark, outRoot, fp, docs, nDocs)
     val graphSnap = SnapshotTable.write(
-      canonical
-        .withColumn("predicate", regexp_replace(col("pred"), "[^A-Za-z0-9]+", "_"))
-        .repartitionByRange(partitions, col("predicate"), col("subj"))
-        .sortWithinPartitions(col("predicate"), col("subj")),
+      Materialize.publishLayout(canonical, partitions),
       graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"))
-    (RunReport(stages.toSeq, triples.count(), canonical.count()), graphSnap)
+    (RunReport(stages, triples.count(), canonical.count()), graphSnap)
   }
 
   case class IncrementalResult(processedDocsSnapshot: Long,
@@ -218,19 +192,9 @@ object Pipeline {
     // from the persisted state only on the repair path where the raw
     // layer noop'd but the canonical table is behind
     val matchedDf = rawMatched.getOrElse {
-      val taxaStateDir = s"$rawGraphTableDir-state/taxa"
-      val taxaDf = SnapshotTable.read(spark, taxaStateDir)
-        .select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
-          col("TaxonRankName"), col("rowIdx"))
-      if (taxaDf.count() <= maxDriverRows) {
-        val taxa = taxaDf.collect()
-          .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
-            r.getString(2), r.getString(3), r.getLong(4))).sortBy(_.rowIdx)
-        Link.matchedRowsToDf(spark,
-          LocalMatcher.matchTaxa(taxa.toSeq,
-            DataGen.wdSparqlRows, DataGen.lineageRows))
-      } else Link.matchTaxaFromTaxa(taxaDf,
-        DataGen.wdSparql(spark), DataGen.wdLineage(spark))
+      Link.matchStacked(SnapshotTable.read(spark, s"$rawGraphTableDir-state/taxa"),
+        DataGen.wdSparqlRows, DataGen.lineageRows, maxDriverRows)
+        .fold(Link.matchedRowsToDf(spark, _), identity)
     }
     val mappingDf = Canonical.connectedComponents(
       Canonical.equivalenceEdges(matchedDf))
@@ -281,7 +245,7 @@ object Pipeline {
     val rawRebuiltSince = (lastRawProcessed + 1 to rawSnapNow)
       .exists(id => rawOps.get(id).forall(op => op != "append" && op != "replace"))
 
-    val tripleCols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
+    val tripleCols = Materialize.tripleCols
     val (outDf, mode) =
       if (raw.mode == "rebuild" || canonSnap == 0 || rawRebuiltSince ||
           mappingChanged)
@@ -375,18 +339,9 @@ object Pipeline {
     val stateLost = lastProcessed > 0 &&
       (oldTaxaSnap.isEmpty || oldProbesSnap.isEmpty)
 
-    val taxaCols = Seq("TaxonId", "TaxonName", "TaxonPathName",
-      "TaxonRankName", "rowIdx")
-    def collectTaxa(df: DataFrame): Seq[LocalMatcher.TaxaRow] =
-      df.select(taxaCols.map(col): _*).collect()
-        .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
-          r.getString(2), r.getString(3), r.getLong(4)))
-        .sortBy(_.rowIdx).toSeq
-
     // 1-2: merge delta taxa into the accumulated state, derive dicts.
-    // The taxa state is dimension-sized (DISTINCT mention 4-tuples), so
-    // the driver-local dict refinement applies — the same guarded
-    // assumption as Link.matchTaxaAdaptive.
+    // The taxa state is a stacked distinct-taxa table, so it feeds the
+    // matcher seam (Link.matchStacked) directly.
     val delta = SnapshotTable.readDelta(spark, docsTableDir, lastProcessed,
       Some(docsSnap))
     val deltaRecords = Extract.records(delta)
@@ -394,7 +349,6 @@ object Pipeline {
     // base 2^40: rowIdx = recNum (source) / 2^40 + recNum (target) — the
     // global sources-then-targets ordinal, append-stable
     val deltaTaxa = Link.stackTaxa(deltaRecords, 1L << 40)
-      .select(taxaCols.map(col): _*)
     val oldTaxaDf = oldTaxaSnap.map(s =>
       SnapshotTable.read(spark, taxaStateDir, Some(s)))
     // full-corpus records, materialized at most once, only when needed
@@ -408,7 +362,7 @@ object Pipeline {
       fr
     }
     val mergedTaxaDf = (if (stateLost)
-      Link.stackTaxa(fullRecords, 1L << 40).select(taxaCols.map(col): _*)
+      Link.stackTaxa(fullRecords, 1L << 40)
     else
       oldTaxaDf.map(_.unionByName(deltaTaxa)).getOrElse(deltaTaxa))
       .groupBy(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
@@ -416,14 +370,12 @@ object Pipeline {
       .agg(min(col("rowIdx")).as("rowIdx"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // dictionary derivation, ADAPTIVE (the same row-count guard policy
-    // as Link.matchTaxaAdaptive): while the distinct-taxa state fits
-    // the driver, the LocalMatcher refinement runs in one collect;
-    // beyond it the distributed matcher + relational dict build take
-    // over — compact == distributed is test-pinned, so the switch
-    // never changes the answer. Both produce (key, wd, mv) dict
-    // DataFrames; the compact path additionally yields the hash maps
-    // the fused emission broadcasts.
+    // dictionary derivation through the matcher seam: driver rows
+    // (while the distinct-taxa state fits the driver) give hash maps the
+    // emission broadcasts; the distributed arm gives matcher output the
+    // relational dict build runs over — compact == distributed is
+    // test-pinned, so the switch never changes the answer. Both also
+    // produce (key, wd, mv) dict DataFrames for the stale-probe check.
     // persists created by the distributed branch (matcher output + the
     // two dicts) are released after the final commit — a streaming
     // micro-batch loop must not accumulate storage blocks per call.
@@ -432,27 +384,25 @@ object Pipeline {
     // from it, instead of re-running the matcher on identical input).
     val toRelease = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var finalMatched: Option[DataFrame] = None
-    def deriveDicts(taxaDf: DataFrame, capture: Boolean): (DataFrame, DataFrame,
-        Option[(Map[String, (String, String)], Map[String, (String, String)])]) =
-      if (taxaDf.count() <= maxDriverRows) {
-        val rows = LocalMatcher.matchTaxa(collectTaxa(taxaDf),
-          DataGen.wdSparqlRows, DataGen.lineageRows)
-        if (capture && keepMatched)
-          finalMatched = Some(Link.matchedRowsToDf(spark, rows))
-        val (mi, mn) = Materialize.localWdMapDicts(rows)
-        def toDf(m: Map[String, (String, String)]) =
-          m.toSeq.map { case (k, (w, v)) => (k, w, v) }.toDF("key", "wd", "mv")
-        (toDf(mi), toDf(mn), Some((mi, mn)))
-      } else {
-        val matched = Link.matchTaxaFromTaxa(taxaDf,
-          DataGen.wdSparql(spark), DataGen.wdLineage(spark))
-        val (di, dn) = Materialize.wdMapDicts(matched)
-        if (capture && keepMatched) finalMatched = Some(matched)
-        else toRelease += matched
-        toRelease += di; toRelease += dn
-        (di, dn, None)
+    def deriveDicts(taxaDf: DataFrame, capture: Boolean)
+        : (DataFrame, DataFrame, Materialize.Dicts) =
+      Link.matchStacked(taxaDf, DataGen.wdSparqlRows, DataGen.lineageRows,
+          maxDriverRows) match {
+        case Left(rows) =>
+          if (capture && keepMatched)
+            finalMatched = Some(Link.matchedRowsToDf(spark, rows))
+          val (mi, mn) = Materialize.localWdMapDicts(rows)
+          def toDf(m: Map[String, (String, String)]) =
+            m.toSeq.map { case (k, (w, v)) => (k, w, v) }.toDF("key", "wd", "mv")
+          (toDf(mi), toDf(mn), Materialize.DriverDicts(mi, mn))
+        case Right(matched) =>
+          val (di, dn) = Materialize.wdMapDicts(matched)
+          if (capture && keepMatched) finalMatched = Some(matched)
+          else toRelease += matched
+          toRelease += di; toRelease += dn
+          (di, dn, Materialize.FrameDicts(di, dn))
       }
-    val (newIdDf, newNameDf, newMaps) = deriveDicts(mergedTaxaDf, capture = true)
+    val (newIdDf, newNameDf, newDicts) = deriveDicts(mergedTaxaDf, capture = true)
 
     // 3-4: stale-emission detection, fully DISTRIBUTED: resolve every
     // previously-seen probe under the previous and the final
@@ -481,28 +431,13 @@ object Pipeline {
 
     val emitRecords = if (needRebuild) fullRecords else deltaRecords
     val mm = Extract.mediaMentions(emitRecords, DataGen.mediaMeta(spark))
-    val tagged = (newMaps match {
-      case Some((mi, mn)) =>
-        Materialize.globiTriplesFusedTagged(emitRecords, mi, mn, Some(mm))
-      case None =>
-        // beyond-driver dictionaries: distributed two-tier resolution +
-        // tagged split emission — no driver-side dictionary at all
-        Materialize.globiTriplesSplitTagged(
-          Materialize.resolve(emitRecords, newIdDf, newNameDf), Some(mm))
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tripleCols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
-    val uniquePart = tagged.filter(!col("shared")).select(tripleCols.map(col): _*)
-    val sharedPart = tagged.filter(col("shared")).select(tripleCols.map(col): _*)
-      .dropDuplicates(tripleCols)
+    val tagged = Materialize.triplesTagged(emitRecords, newDicts, Some(mm))
     val (outDf, mode) =
       if (needRebuild || graphSnap == 0)
-        (uniquePart.unionByName(sharedPart), if (needRebuild) "rebuild" else "append")
-      else {
-        val sharedNew = sharedPart.join(
-          SnapshotTable.read(spark, rawGraphTableDir)
-            .select(tripleCols.map(col): _*), tripleCols, "left_anti")
-        (uniquePart.unionByName(sharedNew), "append")
-      }
+        (Materialize.dedupShared(tagged, None), if (needRebuild) "rebuild" else "append")
+      else
+        (Materialize.dedupShared(tagged, Some(SnapshotTable.read(spark, rawGraphTableDir))),
+          "append")
     val persisted = outDf
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val written = persisted.count()
@@ -563,50 +498,44 @@ object Pipeline {
   def run(spark: SparkSession, nDocs: Long, outRoot: String,
       partitions: Int = 32): RunReport = {
     val fp = s"corpus:$nDocs:v1"
-    val stages = scala.collection.mutable.ArrayBuffer[StageResult]()
-
     val (docs, s0) = stage(spark, outRoot, "00_corpus", fp) {
       DataGen.corpus(spark, nDocs, partitions).toDF()
     }
-    stages += s0
-
-    val (records, s1) = stage(spark, outRoot, "10_extract", fp) {
-      Extract.records(docs)
-    }
-    stages += s1
-
-    val (matched, s2) = stage(spark, outRoot, "20_link", fp) {
-      // adaptive: driver-local refinement while the distinct-taxa table
-      // is dimension-sized, distributed matcher beyond that — the
-      // row-count guard replaces the caller-asserted assumption
-      Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-        DataGen.lineageRows, nDocs)
-    }
-    stages += s2
-
-    val (triples, s3) = stage(spark, outRoot, "30_triples", fp) {
-      val (dictId, dictName) = Materialize.wdMapDicts(matched)
-      val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
-      // fused broadcast-map path (dictionaries are dimension-sized);
-      // swap to resolve()+globiTriples() for beyond-memory dictionaries
-      Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
-    }
-    stages += s3
-
-    val (canonical, s4) = stage(spark, outRoot, "40_canonical", fp) {
-      val edges = Canonical.equivalenceEdges(matched)
-      val mapping = Canonical.connectedComponents(edges)
-      Canonical.canonicalizeTriples(triples, mapping)
-    }
-    stages += s4
-
+    val (triples, canonical, stages) = buildStages(spark, outRoot, fp, docs, nDocs)
     // final graph layout: predicate-partitioned, range-partitioned files
     // of the CANONICAL stage output (the documented dataflow: extract →
     // link → materialize → canonicalize → write; raw triples remain
     // available in the 30_triples stage parquet)
     Materialize.writeTriples(canonical, s"$outRoot/50_graph",
       numPartitions = partitions)
+    RunReport(s0 +: stages, triples.count(), canonical.count())
+  }
 
-    RunReport(stages.toSeq, triples.count(), canonical.count())
+  /** Stages 10–40 over a docs frame, each checkpointed under outRoot
+    * with fingerprint `fp`: extract → link → materialize → canonicalize.
+    * Returns the raw and canonical triples and the four stage results.
+    */
+  private def buildStages(spark: SparkSession, outRoot: String, fp: String,
+      docs: DataFrame, nDocs: Long): (DataFrame, DataFrame, Seq[StageResult]) = {
+    val (records, s1) = stage(spark, outRoot, "10_extract", fp) {
+      Extract.records(docs)
+    }
+    val (matched, s2) = stage(spark, outRoot, "20_link", fp) {
+      Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+        DataGen.lineageRows, nDocs)
+    }
+    val (triples, s3) = stage(spark, outRoot, "30_triples", fp) {
+      val (dictId, dictName) = Materialize.wdMapDicts(matched)
+      val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
+      // driver hash maps (dictionaries are dimension-sized); beyond
+      // memory, Materialize.triplesTagged takes FrameDicts instead
+      Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
+    }
+    val (canonical, s4) = stage(spark, outRoot, "40_canonical", fp) {
+      val edges = Canonical.equivalenceEdges(matched)
+      val mapping = Canonical.connectedComponents(edges)
+      Canonical.canonicalizeTriples(triples, mapping)
+    }
+    (triples, canonical, Seq(s1, s2, s3, s4))
   }
 }

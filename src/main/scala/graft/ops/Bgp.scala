@@ -82,8 +82,7 @@ object Bgp {
     // not an IRI opener (ADVICE r05: an unparenthesized `FILTER ?a < 5`
     // set inAngle and swallowed the following '.'-separators, silently
     // mis-merging clauses)
-    def inFilterSegment: Boolean =
-      cur.toString.trim.regionMatches(true, 0, "FILTER", 0, 6)
+    def inFilterSegment: Boolean = isFilter(cur.toString)
     s.foreach {
       case '"' => inQ = !inQ; cur += '"'
       case '<' if !inQ && depth == 0 && !inFilterSegment =>
@@ -98,6 +97,12 @@ object Bgp {
     out += cur.toString
     out.result().map(_.trim).filter(_.nonEmpty)
   }
+
+  // the FILTER keyword, not any segment that starts with those letters:
+  // a `filter:`-prefixed name is a term
+  private val filterKeyword = """(?i)^FILTER(?=[\s(])""".r
+  private def isFilter(segment: String): Boolean =
+    filterKeyword.findFirstIn(segment.trim).isDefined
 
   private val regexRe =
     """(?is)regex\(\s*\?(\w+)\s*,\s*"([^"]*)"\s*\)""".r
@@ -191,7 +196,7 @@ object Bgp {
         s"unparseable term '$other' (expect ?var, <iri>, \"lit\", pfx:local, or a)")
     }
     splitTopLevel(bgp).map { t =>
-      require(!t.toUpperCase.startsWith("FILTER"),
+      require(!isFilter(t),
         s"FILTER clause '$t' — use query()/parseQuery(), which handle filters")
       val toks = t.split("\\s+").toSeq
       require(toks.length == 3,
@@ -204,7 +209,7 @@ object Bgp {
   private def parseBody(bgp: String, prefixes: Map[String, String]):
       (Seq[Pattern], Seq[FilterExpr]) = {
     val (fSegs, pSegs) =
-      splitTopLevel(bgp).partition(_.toUpperCase.startsWith("FILTER"))
+      splitTopLevel(bgp).partition(isFilter)
     (parse(pSegs.mkString(" . "), prefixes),
       fSegs.map(s => parseFilter(s.trim.drop("FILTER".length).trim, prefixes)))
   }

@@ -17,8 +17,9 @@ object Bucketing {
     * vertical-partitioning layout: partition by pred, bucket by subj —
     * a pred-filtered pattern scan then reads ONLY its predicate's
     * files via partition pruning while subj joins stay exchange-free
-    * on the bucketing; probed in ProbeBucket: partitioned+bucketed
-    * scans keep `Bucketed: true` and SelectedBucketsCount). The input
+    * on the bucketing; OPTIMIZATION_r06.md records that
+    * partitioned+bucketed scans keep `Bucketed: true` and
+    * SelectedBucketsCount). The input
     * is re-clustered by (partitionCols, bucket-id) so each task holds
     * whole (partition, bucket) groups — without it every write task
     * would emit a file per partition×bucket it touches and the file

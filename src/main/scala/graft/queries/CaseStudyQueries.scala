@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kg._
-import graft.ops.Pca
+import graft.ops.{Par, Pca}
 
 /** Case-study analytic workload over the REAL materialized triple
   * table, plus the forced-distributed flagship pipeline.
@@ -19,8 +19,10 @@ import graft.ops.Pca
   * kg_pipeline_triples_dist is the BEYOND-DRIVER-MEMORY production
   * path, forced: `Link.matchTaxaAdaptive(..., maxDriverRows = 0)` takes
   * the fully distributed matcher (matcher.py:432-478 re-expressed as
-  * broadcast joins + scored disambiguation), then distributed two-tier
-  * resolution + emission (`Materialize.resolve` + `globiTriples`). It is
+  * broadcast joins + scored disambiguation), then the one emission over
+  * dictionary frames (`Materialize.triplesTagged` with `FrameDicts`, so
+  * resolution is `Materialize.resolve`'s joins) and the split dedup
+  * (`Materialize.dedupShared`). It is
   * hash-gated against the SAME independent SQL re-derivation as
   * kg_pipeline_triples — whose dictionary side-channel is written by
   * the driver-local matcher — so a green driver row certifies
@@ -156,7 +158,7 @@ object CaseStudyQueries {
     // edge build consume different upstreams (bucketed triple table vs
     // the records-derived taxon paths) — run them concurrently (guide
     // §2.6); within the chain order is preserved
-    Materialized.inParallel(
+    Par.run(
       "graph" -> (() => { organismEdges(s, dir); organismTriangles(s, dir); () }),
       "taxonomy" -> (() => { taxonomyEdges(s, dir); () }))
   }
@@ -172,8 +174,8 @@ object CaseStudyQueries {
         DataGen.lineageRows, n, maxDriverRows = 0L)
       val (dictId, dictName) = Materialize.wdMapDicts(matched)
       val mm = Extract.mediaMentions(records, DataGen.mediaMeta(s))
-      Materialize.globiTriplesSplit(
-        Materialize.resolve(records, dictId, dictName), Some(mm))
+      Materialize.dedupShared(Materialize.triplesTagged(records,
+        Materialize.FrameDicts(dictId, dictName), Some(mm)), None)
     }),
 
     // CS3: top-20 organisms by interaction degree (both interaction

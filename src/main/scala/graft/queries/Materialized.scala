@@ -68,32 +68,6 @@ object Materialized {
     }
   }
 
-  /** Run independent shared-table builders concurrently (guide §2.6 —
-    * overlap independent jobs): Spark's scheduler happily runs several
-    * jobs at once inside one application, and the sequential build left
-    * 31 of 32 cores idle during every driver-side segment (the
-    * LocalMatcher refinement, manifest/commit IO, planning) and every
-    * job tail. Each thunk still builds through its own [[once]] memo,
-    * so dependencies resolve by blocking on the dependency's per-key
-    * lock and nothing is ever built twice. Failures propagate: the
-    * first exception rethrows after all threads finish (a failed
-    * builder leaves its memo empty, so the caller's next direct call
-    * re-runs it and reports the real error).
-    */
-  private[queries] def inParallel(tasks: (String, () => Unit)*): Unit = {
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = tasks.map { case (n, t) =>
-      val th = new Thread(() => {
-        try t() catch { case e: Throwable => errs.add(e); () }
-      }, s"mat-$n")
-      th.setDaemon(true)
-      th.start()
-      th
-    }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-  }
-
   /** Launch the rest of the shared-build DAG in the background the
     * first time a harness-context build starts (guide §2.6): Bench and
     * Verify materialize the shared tables through four sequential

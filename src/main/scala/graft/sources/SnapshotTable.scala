@@ -1452,8 +1452,12 @@ object SnapshotTable {
       .getOrElse(throw new IllegalStateException(s"corrupt ref file $p"))
   }
 
-  def dropRef(dir: String, name: String): Unit =
-    Files.deleteIfExists(refPath(dir, name))
+  /** Delete ref `name` and the lock file [[updateRef]] leaves beside it. */
+  def dropRef(dir: String, name: String): Unit = {
+    val p = refPath(dir, name)
+    Files.deleteIfExists(p)
+    Files.deleteIfExists(p.resolveSibling(s"$name.lock"))
+  }
 
   def listRefs(dir: String): Seq[(String, Long)] = {
     val d = Paths.get(dir, "metadata", "refs")

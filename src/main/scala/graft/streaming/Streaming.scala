@@ -27,14 +27,16 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val records = graft.kg.Extract.records(batch)
-        val matched = graft.kg.Link.matchTaxa(records,
-          graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark),
-          nDocs = 1L << 40)
-        val (dictId, dictName) = graft.kg.Materialize.wdMapDicts(matched)
-        val resolved = graft.kg.Materialize.resolve(records, dictId, dictName)
-        graft.kg.Materialize.globiTriples(resolved)
+        import graft.kg.{DataGen, Extract, Link, Materialize}
+        val records = Extract.records(batch)
+        val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+          DataGen.lineageRows, nDocs = 1L << 40, maxDriverRows = 0L)
+        val (dictId, dictName) = Materialize.wdMapDicts(matched)
+        val tagged = Materialize.triplesTagged(records,
+          Materialize.FrameDicts(dictId, dictName), None)
+        Materialize.dedupShared(tagged, None)
           .write.mode("append").parquet(outDir)
+        tagged.unpersist()
         ()
       }
       .start()

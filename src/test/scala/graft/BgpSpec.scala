@@ -196,6 +196,16 @@ class BgpSpec extends AnyFunSuite {
     assert(got === Array("b"))
   }
 
+  test("a filter:-prefixed subject is a term, not a FILTER clause") {
+    val prefixes = Bgp.defaultPrefixes + ("filter" -> "http://ex.org/f/")
+    val bgp = "filter:a <http://ex.org/p.q> ?y . ?y <http://ex.org/r> ?z"
+    assert(Bgp.parse(bgp, prefixes) === Seq(
+      Pattern(C("http://ex.org/f/a"), C("http://ex.org/p.q"), V("y")),
+      Pattern(V("y"), C("http://ex.org/r"), V("z"))))
+    val (pats, _, fs) = Bgp.parseQuery(bgp, prefixes)
+    assert(pats.length == 2 && fs.isEmpty)
+  }
+
   test("unbound select variable fails loudly") {
     val ex = intercept[IllegalArgumentException] {
       Bgp.query(triples, "?a emi:hasSource ?b", Seq("zzz"))

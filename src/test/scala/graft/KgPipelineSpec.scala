@@ -18,12 +18,12 @@ class KgPipelineSpec extends AnyFunSuite {
   def engineTriples(partitions: Int): Set[Model.Triple] = {
     val docs = DataGen.corpus(spark, N, partitions).toDF()
     val records = Extract.records(docs)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), N)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, N, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
-    val resolved = Materialize.resolve(records, dictId, dictName)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
-    Materialize.globiTriples(resolved, Some(mm))
+    Materialize.dedupShared(Materialize.triplesTagged(records,
+      Materialize.FrameDicts(dictId, dictName), Some(mm)), None)
       .as[Model.Triple].collect().toSet
   }
 
@@ -51,8 +51,8 @@ class KgPipelineSpec extends AnyFunSuite {
   test("fused broadcast-map emission equals join-based emission") {
     val docs = DataGen.corpus(spark, N, 4).toDF()
     val records = Extract.records(docs)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), N)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, N, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val fused = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -63,16 +63,18 @@ class KgPipelineSpec extends AnyFunSuite {
   test("compact (driver-local) matcher path equals the distributed path") {
     val docs = DataGen.corpus(spark, N, 4).toDF()
     val records = Extract.records(docs)
-    val matched = Link.matchTaxaCompact(records, DataGen.wdSparqlRows,
-      DataGen.lineageRows, N)
+    val matched = Link.matchStacked(Link.stackTaxa(records, N),
+      DataGen.wdSparqlRows, DataGen.lineageRows, Long.MaxValue)
+      .fold(identity, _ => fail("the guard chose the distributed arm"))
     val (idMap, nameMap) = Materialize.localWdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
-    val compact = Materialize.globiTriplesFusedMaps(records, idMap, nameMap, Some(mm))
+    val compact = Materialize.dedupShared(Materialize.triplesTagged(records,
+      Materialize.DriverDicts(idMap, nameMap), Some(mm)), None)
       .as[Model.Triple].collect().toSet
     assert(compact == engineSet)
     // and the matched rows themselves agree with the distributed matcher
-    val distributed = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), N)
+    val distributed = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, N, maxDriverRows = 0)
       .select("TaxonId", "TaxonName", "Mapped_Value", "Mapped_ID_WD",
         "Match_Status", "rowIdx")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
@@ -100,8 +102,8 @@ class KgPipelineSpec extends AnyFunSuite {
 
   test("matcher covers the status lattice") {
     val records = Extract.records(DataGen.corpus(spark, N, 4).toDF())
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), N)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, N, maxDriverRows = 0)
     val statuses = matched.select("Match_Status").distinct()
       .as[String].collect().toSet
     assert(statuses.contains("NAME-MATCH-YES"))

@@ -64,8 +64,8 @@ class PlanSpec extends AnyFunSuite {
   test("KG resolution joins broadcast the dictionaries") {
     val docs = graft.kg.DataGen.corpus(spark, 50, 2).toDF()
     val records = graft.kg.Extract.records(docs)
-    val matched = graft.kg.Link.matchTaxa(records,
-      graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark), 50)
+    val matched = graft.kg.Link.matchTaxaAdaptive(records, graft.kg.DataGen.wdSparqlRows,
+      graft.kg.DataGen.lineageRows, 50, maxDriverRows = 0)
     val (dictId, dictName) = graft.kg.Materialize.wdMapDicts(matched)
     val resolved = graft.kg.Materialize.resolve(records, dictId, dictName)
     val plan = planOf(resolved.toDF())

@@ -90,6 +90,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       SnapshotTable.createRef(dir, "stale", s1)
     }
+    // dropping a ref that was moved also removes updateRef's lock file
+    val refsDir = java.nio.file.Paths.get(dir, "metadata", "refs")
+    assert(java.nio.file.Files.exists(refsDir.resolve("main.lock")))
+    SnapshotTable.dropRef(dir, "main")
+    assert(SnapshotTable.listRefs(dir).isEmpty)
+    assert(!java.nio.file.Files.exists(refsDir.resolve("main.lock")),
+      "dropRef left the ref's lock file behind")
   }
 
   test("pipeline reads the interleaved doc corpus from a snapshot") {
@@ -197,8 +204,8 @@ class SnapshotTableSpec extends AnyFunSuite {
       .as[Model.Triple].collect().toSet
     // full rebuild over the complete corpus
     val records = Extract.records(all)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 100)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 100, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val want = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -228,8 +235,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     val got = SnapshotTable.read(spark, canonDir).as[Model.Triple].collect().toSet
     // full canonical rebuild over the complete corpus
     val records = Extract.records(all)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 100)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 100, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -403,8 +410,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(r2.mode == "rebuild", s"expected rebuild on lost state, got ${r2.mode}")
     val got = SnapshotTable.read(spark, graphDir).as[Model.Triple].collect().toSet
     val records = Extract.records(all)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 80)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 80, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val want = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -461,8 +468,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     // exactness vs a full rebuild
     val all = (0L until 60L).map(doc).toDF()
     val records = Extract.records(all)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 60)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 60, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val want = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -494,8 +501,8 @@ class SnapshotTableSpec extends AnyFunSuite {
 
     // raw table equals the full rebuild
     val records = Extract.records(all)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 100)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 100, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -569,8 +576,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     val got = SnapshotTable.read(spark, canonDir).as[Model.Triple].collect().toSet
     val all = (inc1 ++ inc2).toDF()
     val records = Extract.records(all)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 20)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 20, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -623,8 +630,8 @@ class SnapshotTableSpec extends AnyFunSuite {
     val all = DataGen.corpus(spark, 60, 4).toDF()
     // the truth the repaired pipeline must reach, whatever the crash
     val records = Extract.records(all)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 60)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 60, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))

@@ -59,8 +59,8 @@ class SourcesSpec extends AnyFunSuite {
     // typed literals, full-IRI fallbacks and the `a` shorthand
     val docs = DataGen.corpus(spark, 120, 4).toDF()
     val records = Extract.records(docs)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 120)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 120, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))

@@ -21,11 +21,11 @@ class StreamingSpec extends AnyFunSuite {
     // batch equivalent (no media in the stream path)
     val docs = graft.kg.DataGen.corpus(spark, 120, 2).toDF()
     val records = graft.kg.Extract.records(docs)
-    val matched = graft.kg.Link.matchTaxa(records,
-      graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark), 1L << 40)
+    val matched = graft.kg.Link.matchTaxaAdaptive(records, graft.kg.DataGen.wdSparqlRows,
+      graft.kg.DataGen.lineageRows, 1L << 40, maxDriverRows = 0)
     val (dictId, dictName) = graft.kg.Materialize.wdMapDicts(matched)
-    val want = graft.kg.Materialize
-      .globiTriples(graft.kg.Materialize.resolve(records, dictId, dictName))
+    val want = graft.kg.Materialize.dedupShared(graft.kg.Materialize.triplesTagged(
+        records, graft.kg.Materialize.FrameDicts(dictId, dictName), None), None)
       .as[graft.kg.Model.Triple].collect().toSet
     assert(got == want, s"got=${got.size} want=${want.size}")
   }
@@ -360,8 +360,8 @@ class StreamingSpec extends AnyFunSuite {
     q.awaitTermination()
     val got = SnapshotTable.read(spark, graphDir).as[Model.Triple].collect().toSet
     val records = Extract.records(docs)
-    val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 90)
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows, 90, maxDriverRows = 0)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val want = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))

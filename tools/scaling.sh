@@ -4,10 +4,10 @@
 # the faithful local analogy of an N-executor vs 4N-executor cluster
 # (a real 4N cluster has 4x heap and 4x GC threads too).
 #
-# Usage: tools/scaling.sh [nDocs] [N]      (defaults 400000, 2)
+# Usage: tools/scaling.sh [nDocs] [N]      (defaults 800000, 2, as graft.ScalingBench)
 set -euo pipefail
 cd "$(dirname "$0")/.."
-NDOCS="${1:-400000}"
+NDOCS="${1:-800000}"
 N="${2:-2}"
 N4=$((N * 4))
 DIR=$(mktemp -d /tmp/graft-scaling-XXXX)
